@@ -55,14 +55,22 @@ def _stage_concurrent(table, frames: list[DataFrame]) -> None:
     transactions carry no expected_base, so concurrent staging has no
     conflict window; constraint Observations ride each write unchanged.
     The final table (files, stats, blooms, version order) is identical
-    to the sequential loop's."""
+    to the sequential loop's. If any staging write (or commit) raises,
+    every transaction not yet committed is aborted before the error
+    propagates, so a failed fixture leaves no orphan staging dir."""
     from concurrent.futures import ThreadPoolExecutor
 
     txns = [table.begin() for _ in frames]
-    with ThreadPoolExecutor(max_workers=min(4, max(1, len(frames)))) as pool:
-        list(pool.map(lambda tf: tf[0].insert(tf[1]), zip(txns, frames)))
-    for t in txns:
-        t.commit()
+    try:
+        with ThreadPoolExecutor(max_workers=min(4, max(1, len(frames)))) as pool:
+            list(pool.map(lambda tf: tf[0].insert(tf[1]), zip(txns, frames)))
+        for t in txns:
+            t.commit()
+    except BaseException:
+        for t in txns:
+            if not t._done:  # a constraint violation already aborted its own
+                t.abort()
+        raise
 
 
 def q_source_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -43,9 +43,10 @@ import os
 import shutil
 import uuid
 
+from functools import reduce
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -239,6 +240,13 @@ def _as_conjuncts(where) -> list[tuple]:
     return conj
 
 
+def _predicate(where):
+    """``where`` (one ``(column, op, value)`` tuple or a list, ANDed) →
+    one Column predicate."""
+    terms = [_ZONE_PRED_OPS[op](F.col(c), v) for c, op, v in _as_conjuncts(where)]
+    return reduce(lambda a, b: a & b, terms)
+
+
 def _bloom_may_match(bloom_b64: str | None, op: str, value) -> bool:
     """Can a file with this bloom satisfy ``col op value``? Only ``=``
     is bloom-answerable; a bloom "no" is a proof of absence (no false
@@ -287,6 +295,9 @@ def _fsync_dir(path: str) -> None:
 # the distributed semi-join discovery alone (still correct, just unpruned)
 _ERASE_BLOOM_MAX_KEYS = 100_000
 
+# the (file, pos) rows delete_mor writes: declared, never inferred
+_DV_SCHEMA = "file string, pos long"
+
 
 def _scan_with_dvs(
     spark: SparkSession,
@@ -298,14 +309,17 @@ def _scan_with_dvs(
     """Scan ``files`` under ``schema``, applying any deletion vectors:
     files without a DV are read plain; files WITH one are read alongside
     the scan-stable ``_metadata`` position columns and anti-joined
-    against the union of their (file, pos) vectors. The DV side is
+    against the union of their (file, pos) vectors, read under the
+    declared ``_DV_SCHEMA`` (no per-scan inference). The DV side is
     O(deleted rows) and hash-joins against only the vectored files —
     clean files never pay the tax.
 
     ``keep_meta`` retains ``__file`` (file-path URI) / ``__pos``
     (row index) columns, captured AT SCAN TIME — the write paths (merge,
     delete_keys, delete_mor) need them, and capturing after a join/union
-    would be unreliable."""
+    would be unreliable. Metadata columns are projected only where they
+    are used: on vectored files (for the anti-join) and for
+    ``keep_meta`` callers; a plain scan of clean files carries none."""
     if not files:
         df = spark.createDataFrame([], schema)
         if keep_meta:
@@ -316,32 +330,28 @@ def _scan_with_dvs(
     vectored = [f for f in files if dvs.get(f)]
     clean = [f for f in files if not dvs.get(f)]
 
-    def scan(paths: list[str]) -> DataFrame:
-        return (
-            spark.read.schema(schema)
-            .parquet(*paths)
-            .withColumn("__file", F.col("_metadata.file_path"))
-            .withColumn("__pos", F.col("_metadata.row_index"))
+    def scan(paths: list[str], meta: bool) -> DataFrame:
+        df = spark.read.schema(schema).parquet(*paths)
+        if not meta:
+            return df
+        return df.withColumn("__file", F.col("_metadata.file_path")).withColumn(
+            "__pos", F.col("_metadata.row_index")
         )
 
     parts = []
     if clean:
-        parts.append(scan(clean))
+        parts.append(scan(clean, keep_meta))
     if vectored:
         dv_dirs = sorted({d for f in vectored for d in dvs[f]})
-        dv_df = spark.read.parquet(*dv_dirs)
-        s = scan(vectored)
-        parts.append(
-            s.join(
-                dv_df,
-                (s["__file"] == dv_df["file"]) & (s["__pos"] == dv_df["pos"]),
-                "anti",
-            )
+        dv_df = spark.read.schema(_DV_SCHEMA).parquet(*dv_dirs)
+        s = scan(vectored, True)
+        s = s.join(
+            dv_df,
+            (s["__file"] == dv_df["file"]) & (s["__pos"] == dv_df["pos"]),
+            "anti",
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out if keep_meta else out.drop("__file", "__pos")
+        parts.append(s if keep_meta else s.drop("__file", "__pos"))
+    return reduce(DataFrame.unionByName, parts)
 
 
 class Transaction:
@@ -374,8 +384,6 @@ class Transaction:
         constraints = self._table.snapshot().get("constraints") or {}
         obs = None
         if constraints:
-            from pyspark.sql import Observation
-
             obs = Observation()
             df = df.observe(
                 obs,
@@ -488,13 +496,9 @@ class Transaction:
         if not candidates:
             return  # provably nothing to delete: commit is a no-op version
         schema = StructType.fromJson(json.loads(snap["schema"]))
-        pred = None
-        for col, op, value in _as_conjuncts(where):
-            term = _ZONE_PRED_OPS[op](F.col(col), value)
-            pred = term if pred is None else pred & term
         survivors = _scan_with_dvs(
             spark, schema, candidates, snap.get("dvs", {})
-        ).filter(~F.coalesce(pred, F.lit(False)))
+        ).filter(~F.coalesce(_predicate(where), F.lit(False)))
         self.insert(survivors)
 
     def delete_mor(self, spark: SparkSession, where) -> None:
@@ -515,6 +519,12 @@ class Transaction:
         path; positions come from the scan-stable ``_metadata.row_index``
         column. Commit/crash semantics are unchanged: the DV is staged
         invisible and becomes visible only at the manifest link.
+
+        One Spark job: the touched files are gathered by an
+        ``Observation`` (``collect_set`` of the file column, O(files
+        touched)) riding the DV write itself, not by re-running the match
+        scan. The vector is written as exactly ``_DV_SCHEMA``, the schema
+        every scan declares when it reads vectors back.
         """
         assert not self._done, "transaction already finished"
         assert not self._replaced and not self._dv_adds, (
@@ -526,24 +536,20 @@ class Transaction:
         if not candidates:
             return  # provably nothing to delete: commit is a no-op version
         schema = StructType.fromJson(json.loads(snap["schema"]))
-        pred = None
-        for col, op, value in _as_conjuncts(where):
-            term = _ZONE_PRED_OPS[op](F.col(col), value)
-            pred = term if pred is None else pred & term
+        obs = Observation()
         # scan applies EXISTING vectors so already-deleted positions are
         # not re-recorded — vectors stay minimal as deletes stack
         matches = (
             _scan_with_dvs(
                 spark, schema, candidates, snap.get("dvs", {}), keep_meta=True
             )
-            .filter(F.coalesce(pred, F.lit(False)))
+            .filter(F.coalesce(_predicate(where), F.lit(False)))
             .select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
+            .observe(obs, F.collect_set("file").alias("files"))
         )
         dv_dir = os.path.join(self._staging, "dv")
         matches.write.mode("overwrite").parquet(dv_dir)
-        touched_uris = [
-            r["file"] for r in matches.select("file").distinct().collect()
-        ]
+        touched_uris = obs.get["files"]
         if not touched_uris:
             shutil.rmtree(dv_dir, ignore_errors=True)
             return  # candidates held no actual match: no-op version
@@ -639,22 +645,11 @@ class Transaction:
         not have deleted makes the backfill non-idempotent."""
         assert not self._done, "transaction already finished"
         self.delete(spark, where)
-        ops = {
-            "=": lambda c, v: c == v, "!=": lambda c, v: c != v,
-            "<": lambda c, v: c < v, "<=": lambda c, v: c <= v,
-            ">": lambda c, v: c > v, ">=": lambda c, v: c >= v,
-        }
-        pred = None
-        for col, op, value in _as_conjuncts(where):
-            term = ops[op](F.col(col), value)
-            pred = term if pred is None else pred & term
-        from pyspark.sql import Observation
-
         obs = Observation()
         df = df.observe(
             obs,
             F.sum(
-                F.when(~F.coalesce(pred, F.lit(False)), 1).otherwise(0)
+                F.when(~F.coalesce(_predicate(where), F.lit(False)), 1).otherwise(0)
             ).alias("outside"),
         )
         self.insert(df)
@@ -826,20 +821,11 @@ class TransactionalTable:
         snap = self.snapshot(version)
         schema = StructType.fromJson(json.loads(snap["schema"]))
         files = snap["files"]
-        residual = None
         if where is not None:
             files, _skipped = prune_files(snap, where)
-            ops = {
-                "=": lambda c, v: c == v, "!=": lambda c, v: c != v,
-                "<": lambda c, v: c < v, "<=": lambda c, v: c <= v,
-                ">": lambda c, v: c > v, ">=": lambda c, v: c >= v,
-            }
-            for col, op, value in _as_conjuncts(where):
-                term = ops[op](F.col(col), value)
-                residual = term if residual is None else residual & term
         self.last_scan = {"files_total": len(snap["files"]), "files_read": len(files)}
         df = _scan_with_dvs(spark, schema, files, snap.get("dvs", {}))
-        return df.filter(residual) if residual is not None else df
+        return df if where is None else df.filter(_predicate(where))
 
     # ------------------------------------------------------- schema change
     def alter_schema(self, new_schema: StructType) -> int:

@@ -57,17 +57,21 @@ def start_and_drain(
     for attempt in range(attempts):
         if attempt and reset is not None:
             reset()
-        q = start()
+        q = None
         try:
+            # inside the try: the planner-process spawn can fail in
+            # ``.start()`` itself, with the same signature
+            q = start()
             q.processAllAvailable()
             return
         except Exception as e:
             if attempt + 1 >= attempts or not is_worker_spawn_flake(e):
                 raise
         finally:
-            try:
-                q.stop()
-            except Exception:
-                # stop() on an already-dead query can rethrow the stream
-                # error; the drain above already adjudicated it.
-                pass
+            if q is not None:
+                try:
+                    q.stop()
+                except Exception:
+                    # stop() on an already-dead query can rethrow the
+                    # stream error; the drain above already adjudicated it.
+                    pass

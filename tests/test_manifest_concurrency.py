@@ -9,8 +9,13 @@ ConflictError (rewrites). These tests race REAL threads through the
 whole path to pin that arbitration down.
 """
 
+import os
 from concurrent.futures import ThreadPoolExecutor
 
+import pytest
+from pyspark.sql import functions as F
+
+from dbms_query_optimizer_spark.operators.sources_queries import _stage_concurrent
 from dbms_query_optimizer_spark.sources.manifest import TransactionalTable
 
 N_WRITERS = 8
@@ -69,3 +74,61 @@ def test_concurrent_merges_one_wins_one_conflicts(spark, tmp_path):
         m2.commit()
     got = sorted((r.id, r.val) for r in TransactionalTable(root).read(spark).collect())
     assert got == [(1, 10.0), (2, 2.0)]  # m2's update never half-applied
+
+
+def _frames(spark, n: int):
+    return [
+        spark.createDataFrame(
+            [(i * 100 + j, float(j)) for j in range(20)], "id long, val double"
+        ).coalesce(2)
+        for i in range(n)
+    ]
+
+
+def test_stage_concurrent_failure_leaves_no_staging_dir(spark, tmp_path):
+    root = str(tmp_path / "stage_fail")
+    table = TransactionalTable.create(
+        root, spark.range(0).selectExpr("id", "cast(id as double) as val").schema
+    )
+    good = _frames(spark, 2)
+    bad = spark.range(5).select(
+        F.when(F.col("id") == 3, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("id"),
+        F.lit(0.0).alias("val"),
+    )
+    with pytest.raises(Exception, match="boom"):
+        _stage_concurrent(table, [good[0], bad, good[1]])
+    assert os.listdir(os.path.join(root, "data")) == []
+    assert table.latest_version() == 0
+
+
+def test_stage_concurrent_matches_serial_manifests(spark, tmp_path):
+    """Concurrent staging publishes the same versions, files, per-file
+    stats and blooms as committing the frames one after another."""
+    schema = spark.range(0).selectExpr("id", "cast(id as double) as val").schema
+    serial = TransactionalTable.create(
+        str(tmp_path / "serial"), schema, bloom_columns=["id"]
+    )
+    for df in _frames(spark, 4):
+        t = serial.begin()
+        t.insert(df)
+        t.commit()
+    concurrent = TransactionalTable.create(
+        str(tmp_path / "concurrent"), schema, bloom_columns=["id"]
+    )
+    _stage_concurrent(concurrent, _frames(spark, 4))
+
+    assert serial.latest_version() == concurrent.latest_version() == 4
+
+    def shape(table, v):
+        snap = table.snapshot(v)
+        files = snap["files"]
+        return (
+            len(files),
+            [snap.get("stats", {}).get(f) for f in files],
+            [snap.get("blooms", {}).get(f) for f in files],
+        )
+
+    for v in range(5):
+        assert shape(serial, v) == shape(concurrent, v), f"version {v}"

@@ -9,12 +9,17 @@ vacuum never reclaims a live vector.
 """
 
 import os
+from urllib.parse import urlparse
 
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from dbms_query_optimizer_spark.sources.manifest import TransactionalTable
+from dbms_query_optimizer_spark.sources.manifest import (
+    _DV_SCHEMA,
+    TransactionalTable,
+)
 
 
 @pytest.fixture()
@@ -182,3 +187,51 @@ def test_restore_across_dv_versions(spark, table):
     assert _rows(spark, table.root) == list(range(10))
     table.restore(2)  # forward again to the vectored state
     assert _rows(spark, table.root) == [5, 6, 7, 8, 9]
+
+
+def test_mor_delete_runs_one_job_with_the_same_dv_adds(spark, table):
+    """The DV write is the delete's only Spark job: the touched files
+    ride it as an Observation instead of a second scan, and they are
+    exactly the files a distinct over the written vector names."""
+    sc = spark.sparkContext
+    td = table.begin()
+    sc.setJobGroup("mor-delete-one-job", "delete_mor")
+    try:
+        td.delete_mor(spark, ("id", ">=", 6))
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("mor-delete-one-job")
+    assert len(jobs) == 1, f"delete_mor ran {len(jobs)} jobs"
+    dv_dir = os.path.join(td._staging, "dv")
+    recomputed = spark.read.parquet(dv_dir).select("file").distinct().collect()
+    paths = {urlparse(r.file).path for r in recomputed}
+    assert td._dv_adds == {
+        f: [dv_dir] for f in table.snapshot()["files"] if f in paths
+    }
+    assert td._dv_adds, "the delete matched rows, so some file is touched"
+    td.commit()
+    assert _rows(spark, table.root) == list(range(6))
+
+
+def test_mor_delete_no_match_after_pruning_stages_nothing(spark, table):
+    # NULL compares UNKNOWN: no file is pruned, yet no row matches
+    td = table.begin()
+    td.delete_mor(spark, ("id", "=", None))
+    assert not td._dv_adds
+    assert not os.path.exists(os.path.join(td._staging, "dv"))
+    td.commit()
+    assert _rows(spark, table.root) == list(range(10))
+
+
+def test_written_vector_reads_back_under_declared_schema(spark, table):
+    td = table.begin()
+    td.delete_mor(spark, ("id", "<", 3))
+    dv_dir = os.path.join(td._staging, "dv")
+    declared = StructType.fromDDL(_DV_SCHEMA)
+    inferred = spark.read.parquet(dv_dir).schema
+    assert [(f.name, f.dataType) for f in inferred] == [
+        (f.name, f.dataType) for f in declared
+    ]
+    got = spark.read.schema(declared).parquet(dv_dir).collect()
+    assert len(got) == 3 and all(r.file and r.pos is not None for r in got)

@@ -123,6 +123,17 @@ def test_read_where_parity_and_file_counts(clustered, spark):
     assert min(k for k, _, _ in got) == 17
 
 
+def test_read_of_clean_files_projects_no_metadata(clustered, spark):
+    """Files without a deletion vector are scanned plain: the
+    ``_metadata`` position columns are projected only where a DV
+    anti-join or a write path uses them."""
+    table, _ = clustered
+    df = table.read(spark, where=("k", "=", 17))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "_metadata" not in plan, plan
+    assert [r.k for r in df.collect()] == [17]
+
+
 def test_string_zone_pruning(clustered, spark):
     table, _ = clustered
     got = table.read(spark, where=("s", ">", "s29")).collect()
